@@ -3,22 +3,26 @@ KG surface next to canonicalization (round-1 backlog item).
 
 The reference stops at emitting tag outputs; its KG re-expression
 (north_star) materializes (subj, pred, obj) triples, and the first
-questions a user asks of a triples table are graph-shaped: node
-degrees and node importance.  Both are expressed as DataFrame ops:
+questions a user asks of a triples table are graph-shaped: degrees,
+paths, co-mentions, importance and communities.  All are DataFrame ops:
 
 * degrees — two groupBy counts + one outer join (two shuffles total);
   multigraph semantics (parallel edges count separately).
-* pagerank — fixed-iteration power method over DISTINCT edges with the
-  standard damping + dangling-mass redistribution.  Each iteration is
-  one join + one aggregation; ``localCheckpoint`` truncates the plan
-  per iteration exactly like the connected-components operator
-  (components.py), so the lineage never grows with iteration count —
-  the property that keeps iterative DataFrame algorithms viable at
-  scale.  The dangling-mass scalar stays distributed (1-row aggregate
-  broadcast-crossJoined back), no driver collect in the loop.
+* ``_power_iteration`` — the ONE PageRank loop: a power method over
+  DISTINCT edges with damping + dangling-mass redistribution.  Each
+  round is one join + one aggregation; ``localCheckpoint`` truncates
+  the plan per round exactly like the connected-components operator
+  (components.py), so the lineage never grows with the round count.
+  ``pagerank`` (uniform, fixed horizon), ``pagerank_personalized``
+  (seed teleport) and ``pagerank_converged`` (L1 tolerance, warm
+  start) differ only in the teleport term, the start vector and the
+  stop rule they hand it.
+* ``_lpa`` — the ONE synchronous label-propagation loop:
+  ``label_propagation`` runs it for a fixed horizon,
+  ``lpa_converged`` to a fixed point with an optional warm start.
 
-Both are DuckDB-oracle-checked (unrolled-CTE SQL, oracles.py) at
-round(6) on doubles.
+The batch forms are DuckDB-oracle-checked (unrolled-CTE SQL,
+oracles.py) at round(6) on doubles.
 """
 
 from __future__ import annotations
@@ -28,6 +32,7 @@ from pyspark.sql import functions as F
 
 DAMPING = 0.85
 PR_ITERATIONS = 5
+LPA_ITERATIONS = 5
 
 
 def degrees(edges: DataFrame, src_col: str = "src",
@@ -228,239 +233,6 @@ def triangle_counts(edges: DataFrame, a_col: str = "a",
     return out
 
 
-def pagerank_personalized(edges: DataFrame, seeds: list[str],
-                          src_col: str = "src", dst_col: str = "dst",
-                          iterations: int = PR_ITERATIONS,
-                          damping: float = DAMPING) -> DataFrame:
-    """Personalized PageRank: restart (and dangling) mass teleports to
-    the SEED set instead of uniformly — relatedness-to-these-entities,
-    the query behind "related repos/symbols" KG features.
-
-    pr_{t+1}(v) = (1-d)*s(v) + d*(sum_{u->v} pr_t(u)/od(u) + dm_t*s(v))
-
-    with s(v) = 1/|S| for seed nodes present in the graph, else 0.
-    Same per-iteration join+agg shape and checkpoint hygiene as
-    ``pagerank``; the teleport vector is one extra column carried on
-    the node table, NOT a broadcast (seeds are a literal list, but the
-    node table itself stays distributed).
-    """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct().persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n_seed = nodes.filter(F.col("node").isin(seeds)).count()
-    if n_seed == 0:
-        # no seed present: the teleport vector is all-zero, so every
-        # rank converges to 0.0 — emit exactly that (one row per node),
-        # matching the SQL mirror's CASE semantics instead of an empty
-        # frame (cross-engine parity if seeds ever miss a corpus)
-        out = nodes.select(
-            "node", F.lit(0.0).cast("double").alias("pr")
-        ).localCheckpoint(eager=True)
-        e.unpersist()
-        nodes.unpersist()
-        return out
-    # loop-invariant state hoisted out of the rounds (guide §2.4): the
-    # edge list pre-joined with its out-degree (ew), and the node table
-    # carrying teleport weight + nullable out-degree (od NULL =
-    # dangling).  Each round is then ONE edge⋈ranks join + aggregation
-    # plus a filter-aggregate for the dangling mass — the r5 form paid
-    # an extra out_deg join and a LEFT ANTI join per round for the same
-    # values (pr/od and the dangling sum are numerically unchanged).
-    out_deg = e.groupBy("src").agg(F.count("*").alias("od"))
-    ew = e.join(out_deg, "src").persist()
-    tele = nodes.join(
-        out_deg.withColumnRenamed("src", "node"), "node", "left"
-    ).withColumn(
-        "sv",
-        F.when(F.col("node").isin(seeds), F.lit(1.0 / n_seed)).otherwise(F.lit(0.0)),
-    ).persist()
-    ranks = tele.select("node", "od", F.col("sv").alias("pr"))
-    for _ in range(iterations):
-        contribs = (
-            ew.join(ranks.select(F.col("node").alias("src"), "pr"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("pr") / F.col("od")).alias("contrib"))
-        )
-        dangling = (
-            ranks.filter(F.col("od").isNull())
-            .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dm"))
-        )
-        ranks = (
-            tele.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node", "od",
-                (
-                    F.lit(1.0 - damping) * F.col("sv")
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("contrib"), F.lit(0.0))
-                       + F.col("dm") * F.col("sv"))
-                ).alias("pr"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    out = ranks.select("node", F.round("pr", 6).alias("pr")).localCheckpoint(
-        eager=True
-    )
-    tele.unpersist()
-    ew.unpersist()
-    e.unpersist()
-    nodes.unpersist()
-    return out
-
-
-LPA_ITERATIONS = 5
-
-
-def label_propagation(edges: DataFrame, a_col: str = "a", b_col: str = "b",
-                      iterations: int = LPA_ITERATIONS) -> DataFrame:
-    """Synchronous label-propagation communities over an undirected
-    edge list (unordered a < b pairs, the ``comention_edges`` output
-    contract): labels start as the node id; each round every node
-    adopts the PLURALITY label among its neighbours, ties broken by
-    the lexicographically smallest label — fully deterministic, so the
-    DuckDB unrolled-CTE oracle replays every round exactly.  Returns
-    (node, community) after a FIXED iteration count (sync LPA can
-    oscillate on bipartite structures; a fixed horizon keeps the
-    result well-defined on both engines).
-
-    Shape at scale: per iteration one join (labels onto the edge list)
-    and two aggregations (neighbour-label counts, then a min-struct
-    argmax per node) — the same join+agg-per-round shape as pagerank;
-    ``localCheckpoint`` truncates lineage per round, the label
-    dimension is never broadcast (unbounded), no driver collect.
-
-    Fixed-horizon LPA has no warm-start story (the labeling is defined
-    BY its trajectory); ``lpa_converged`` below is the incremental
-    variant — it iterates to a fixed point, and its docstring states
-    exactly which warm-start guarantees exist (and which don't).
-    """
-    e = edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")) \
-        .distinct().persist()
-    und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).persist()
-    nodes = und.select("u").distinct()
-    labels = nodes.withColumn("lbl", F.col("u"))
-    for _ in range(iterations):
-        nb = und.join(
-            labels.select(F.col("u").alias("v"), "lbl"), "v"
-        ).select("u", "lbl")
-        counts = nb.groupBy("u", "lbl").agg(F.count("*").alias("c"))
-        labels = (
-            counts.groupBy("u")
-            .agg(F.min(F.struct((-F.col("c")).alias("nc"),
-                                F.col("lbl").alias("l"))).alias("m"))
-            .select("u", F.col("m.l").alias("lbl"))
-            .localCheckpoint(eager=False)
-        )
-    out = labels.select(
-        F.col("u").alias("node"), F.col("lbl").alias("community")
-    ).localCheckpoint(eager=True)
-    und.unpersist()
-    e.unpersist()
-    return out
-
-
-def _lpa_round(und: DataFrame, labels: DataFrame) -> DataFrame:
-    """One synchronous plurality-update round: every node adopts the
-    most frequent label among its neighbours, ties broken by the
-    lexicographically smallest label (min-struct argmax — the same
-    deterministic rule as ``label_propagation``)."""
-    nb = und.join(
-        labels.select(F.col("u").alias("v"), "lbl"), "v"
-    ).select("u", "lbl")
-    counts = nb.groupBy("u", "lbl").agg(F.count("*").alias("c"))
-    return (
-        counts.groupBy("u")
-        .agg(F.min(F.struct((-F.col("c")).alias("nc"),
-                            F.col("lbl").alias("l"))).alias("m"))
-        .select("u", F.col("m.l").alias("lbl"))
-    )
-
-
-def lpa_converged(edges: DataFrame, a_col: str = "a", b_col: str = "b",
-                  init_labels: DataFrame | None = None,
-                  max_rounds: int = 25):
-    """Label propagation iterated until the labeling stops changing,
-    optionally WARM-STARTED from a previous assignment — the
-    incremental-maintenance variant backing stream_communities_ivm.
-    Returns ``(labels, n_rounds, converged)``: (node, community) rows,
-    the number of plurality rounds applied (including the final round
-    that confirmed stability), and whether a fixed point was reached
-    within ``max_rounds``.
-
-    Warm-start guarantees — what holds and what does NOT:
-
-    * GUARANTEED (gated by Q:kg_lpa_inc_invariants): on an UNCHANGED
-      graph, restarting from a converged labeling re-confirms the same
-      fixed point in exactly 1 round with zero label changes — the
-      plurality update is deterministic, and a fixed point maps to
-      itself.  This is the delta-scaled IVM payoff: an empty/small
-      delta costs ~1 round instead of a full cold trajectory.
-    * NOT guaranteed (documented, not claimed): warm labels on a
-      CHANGED graph need not equal the cold labels of the new graph.
-      Unlike PageRank's contraction (unique fixed point, any start),
-      sync LPA admits MANY fixed points, and which one a run lands on
-      depends on its starting labels — the trajectory is part of the
-      algorithm.  A warm start converges to a valid, deterministic
-      labeling (same inputs -> same output), but tie-break sensitivity
-      means it can be a DIFFERENT valid community structure than a
-      cold run's.  Convergence itself is also graph-dependent: sync
-      plurality updates can 2-cycle on bipartite-ish structures, hence
-      the ``max_rounds`` horizon and the explicit ``converged`` flag
-      (measured: the co-mention graphs converge in ~3 rounds at
-      sf0.001-0.01).
-
-    Per round: one join + two aggregations + one node-keyed equality
-    check (count of changed labels — the driver sees one long per
-    round); ``localCheckpoint`` truncates lineage.  New nodes absent
-    from ``init_labels`` start as their own community, exactly like a
-    cold start.
-    """
-    e = edges.select(F.col(a_col).alias("u"), F.col(b_col).alias("v")) \
-        .distinct().persist()
-    und = e.union(
-        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).persist()
-    nodes = und.select("u").distinct()
-    if init_labels is None:
-        labels = nodes.withColumn("lbl", F.col("u"))
-    else:
-        labels = (
-            nodes.join(
-                init_labels.select(F.col("node").alias("u"),
-                                   F.col("community").alias("lbl0")),
-                "u", "left",
-            )
-            .select("u", F.coalesce(F.col("lbl0"), F.col("u")).alias("lbl"))
-        )
-    labels = labels.localCheckpoint(eager=False)
-    rounds, converged = 0, False
-    for _ in range(max_rounds):
-        new = _lpa_round(und, labels).localCheckpoint(eager=False)
-        rounds += 1
-        changed = (
-            labels.join(new.select("u", F.col("lbl").alias("lbl2")), "u")
-            .filter(F.col("lbl") != F.col("lbl2"))
-            .count()
-        )
-        labels = new
-        if changed == 0:
-            converged = True
-            break
-    out = labels.select(
-        F.col("u").alias("node"), F.col("lbl").alias("community")
-    ).localCheckpoint(eager=True)
-    und.unpersist()
-    e.unpersist()
-    return out, rounds, converged
-
-
 def kcore(edges: DataFrame, k: int = 3, rounds: int = 5,
           a_col: str = "a", b_col: str = "b") -> DataFrame:
     """Bounded-round k-core peeling over an undirected edge list
@@ -497,16 +269,168 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 5,
     return out
 
 
-def pagerank_converged(edges: DataFrame, src_col: str = "src",
-                       dst_col: str = "dst", tol: float = 1e-9,
-                       max_iterations: int = 60,
+def _power_iteration(edges: DataFrame, iterations: int,
+                     damping: float = DAMPING,
+                     seeds: list[str] | None = None,
+                     init_ranks: DataFrame | None = None,
+                     tol: float | None = None):
+    """The PageRank power iteration behind ``pagerank``,
+    ``pagerank_personalized`` and ``pagerank_converged``, over the
+    DISTINCT (src, dst) edge set.  Returns ``(ranks, n_rounds)``.
+
+        pr_{t+1}(v) = teleport(v) + d * (sum_{u->v} pr_t(u)/od(u)
+                                         + dangling_share_t(v))
+
+    * uniform (``seeds`` is None): teleport = (1-d)/N, dangling_share =
+      dm_t/N, start 1/N;
+    * personalized: with s(v) = 1/|S| on the seed nodes present in the
+      graph, else 0, teleport = (1-d)*s(v), dangling_share = dm_t*s(v),
+      start s.  The teleport vector is one column carried on the node
+      table, not a broadcast.
+
+    Each is the exact double expression tree its DuckDB oracle mirrors
+    (``kg_pagerank_sql``, ``kg_ppr_sql``).  ``init_ranks`` warm-starts
+    the uniform form: nodes it lacks start at 1/N.  No rank mass (an
+    empty graph, or no seed present) gives 0.0 for every node after 0
+    rounds — the SQL mirror's CASE semantics.
+
+    With ``tol`` None the loop runs exactly ``iterations`` rounds and
+    the ranks are a report, rounded to 6 decimals (cross-engine float
+    rule).  With ``tol`` set it stops after the first round whose L1
+    delta is below ``tol`` (at most ``iterations``) and keeps full
+    precision: the vector is warm-start state.  Only then does a round
+    pay the L1 job — one node-keyed join/agg whose single float the
+    driver sees — so the fixed horizon keeps its per-round plan.
+
+    Loop-invariant state is hoisted out of the rounds (guide §2.4): ew
+    = edges pre-joined with out-degree, ninfo = nodes with nullable od
+    (NULL = dangling).  Per round: one edge⋈ranks join + aggregation, a
+    filter-aggregate for the dangling mass (a 1-row frame
+    broadcast-crossJoined back, no driver collect) and the rank rebuild;
+    ``localCheckpoint`` truncates the plan per round, so the lineage
+    never grows with the round count (the property that keeps iterative
+    DataFrame algorithms viable at scale, as in components.py).
+    """
+    e = edges.select("src", "dst").distinct().persist()
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .union(e.select(F.col("dst").alias("node")))
+        .distinct()
+        .persist()
+    )
+    cached = [e, nodes]
+    seeded = None if seeds is None else F.col("node").isin(seeds)
+    n = (nodes if seeds is None else nodes.filter(seeded)).count()
+    rounds = 0
+    if n == 0:
+        ranks = nodes.select("node", F.lit(0.0).cast("double").alias("pr"))
+    else:
+        out_deg = e.groupBy("src").agg(F.count("*").alias("od"))
+        ew = e.join(out_deg, "src").persist()
+        ninfo = nodes.join(
+            out_deg.withColumnRenamed("src", "node"), "node", "left"
+        )
+        if seeds is None:
+            ninfo = ninfo.persist()
+            teleport, share = F.lit((1.0 - damping) / n), F.col("dm") / n
+            ranks = ninfo.withColumn("pr", F.lit(1.0 / n))
+        else:
+            ninfo = ninfo.withColumn(
+                "sv", F.when(seeded, F.lit(1.0 / n)).otherwise(F.lit(0.0))
+            ).persist()
+            teleport = F.lit(1.0 - damping) * F.col("sv")
+            share = F.col("dm") * F.col("sv")
+            ranks = ninfo.select("node", "od", F.col("sv").alias("pr"))
+        cached += [ew, ninfo]
+        if init_ranks is not None:
+            ranks = ninfo.join(
+                init_ranks.select("node", F.col("pr").alias("pr0")),
+                "node", "left",
+            ).select("node", "od",
+                     F.coalesce(F.col("pr0"), F.lit(1.0 / n)).alias("pr"))
+        if tol is not None:
+            # the first L1 check reads the start vector a second time
+            ranks = ranks.localCheckpoint(eager=False)
+        for _ in range(iterations):
+            contribs = (
+                ew.join(ranks.select(F.col("node").alias("src"), "pr"), "src")
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.sum(F.col("pr") / F.col("od")).alias("contrib"))
+            )
+            dangling = (
+                ranks.filter(F.col("od").isNull())
+                .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dm"))
+            )
+            new_ranks = (
+                ninfo.join(contribs, "node", "left")
+                .crossJoin(F.broadcast(dangling))
+                .select(
+                    "node", "od",
+                    (
+                        teleport
+                        + F.lit(damping)
+                        * (F.coalesce(F.col("contrib"), F.lit(0.0)) + share)
+                    ).alias("pr"),
+                )
+                .localCheckpoint(eager=False)
+            )
+            rounds += 1
+            delta = None if tol is None else (
+                new_ranks.join(
+                    ranks.select("node", F.col("pr").alias("pr_old")), "node"
+                )
+                .agg(F.sum(F.abs(F.col("pr") - F.col("pr_old"))).alias("d"))
+                .first()["d"]
+            )
+            ranks = new_ranks
+            if delta is not None and delta < tol:
+                break
+    pr = F.round("pr", 6) if tol is None else F.col("pr")
+    # materialize the result (eager checkpoint) BEFORE releasing the
+    # cached tables its plan reads: the caller holds a self-contained
+    # frame and the loop's persisted inputs are freed (r2 ADVICE item 3)
+    out = ranks.select("node", pr.alias("pr")).localCheckpoint(eager=True)
+    for df in cached:
+        df.unpersist()
+    return out, rounds
+
+
+def pagerank(edges: DataFrame, iterations: int = PR_ITERATIONS) -> DataFrame:
+    """Fixed-iteration PageRank over the DISTINCT (src, dst) edge set.
+
+    pr_{t+1}(v) = (1-d)/N + d * (sum_{u->v} pr_t(u)/outdeg(u)
+                                 + dangling_mass_t / N)
+
+    Returns (node, pr) with pr rounded to 6 decimals (cross-engine
+    float determinism rule); an empty edge list gives a typed-empty
+    frame.  N is computed once (scalar dimension); everything in the
+    loop is distributed (``_power_iteration``).
+    """
+    return _power_iteration(edges, iterations)[0]
+
+
+def pagerank_personalized(edges: DataFrame, seeds: list[str]) -> DataFrame:
+    """Personalized PageRank: restart (and dangling) mass teleports to
+    the SEED set instead of uniformly — relatedness-to-these-entities,
+    the query behind "related repos/symbols" KG features.
+
+    pr_{t+1}(v) = (1-d)*s(v) + d*(sum_{u->v} pr_t(u)/od(u) + dm_t*s(v))
+
+    with s(v) = 1/|S| for seed nodes present in the graph, else 0;
+    ``PR_ITERATIONS`` rounds, pr rounded to 6 decimals.  If no seed is
+    present every node gets 0.0 (one row per node, not an empty frame).
+    """
+    return _power_iteration(edges, PR_ITERATIONS, seeds=seeds)[0]
+
+
+def pagerank_converged(edges: DataFrame, tol: float = 1e-9,
                        damping: float = DAMPING,
                        init_ranks: DataFrame | None = None):
-    """PageRank iterated to an L1 fixed-point tolerance, optionally
-    WARM-STARTED from a previous rank vector — the incremental-
-    maintenance primitive: after an edge-batch arrives, re-converging
-    from the previous ranks reaches the (unique) fixed point in far
-    fewer rounds than a cold start.
+    """PageRank iterated to an L1 fixed-point tolerance (at most 60
+    rounds), optionally WARM-STARTED from a previous rank vector — the
+    incremental-maintenance primitive: after an edge-batch arrives,
+    re-converging from the previous ranks reaches the (unique) fixed
+    point in far fewer rounds than a cold start.
 
     The update pr_{t+1} = (1-d)/N + d*(M·pr_t + dm_t/N) is an L1
     contraction with factor d for ANY starting vector, so no
@@ -527,163 +451,127 @@ def pagerank_converged(edges: DataFrame, src_col: str = "src",
     in the slow modes, which decay at the worst-case rate d).  IVM
     wins exactly in the micro-batch regime it exists for: small deltas
     on a large accumulated graph.
-
-    Per round: the same join+agg shape as ``pagerank`` plus ONE
-    node-keyed join/agg for the L1 delta — all distributed, the driver
-    sees a single float per round.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct().persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        out = nodes.select("node", F.lit(0.0).cast("double").alias("pr"))
-        e.unpersist()
-        nodes.unpersist()
-        return out, 0
-    # loop-invariant state hoisted as in ``pagerank`` (guide §2.4):
-    # pre-joined edge⋈out-degree list, node table carrying nullable od
-    # (NULL = dangling; replaces the per-round LEFT ANTI join).
-    out_deg = e.groupBy("src").agg(F.count("*").alias("od"))
-    ew = e.join(out_deg, "src").persist()
-    ninfo = nodes.join(
-        out_deg.withColumnRenamed("src", "node"), "node", "left"
+    return _power_iteration(edges, 60, damping, init_ranks=init_ranks,
+                            tol=tol)
+
+
+def _lpa(edges: DataFrame, rounds: int,
+         init_labels: DataFrame | None = None, check: bool = False):
+    """The synchronous label-propagation loop behind
+    ``label_propagation`` and ``lpa_converged``, over an undirected
+    edge list of unordered (a, b) pairs with a < b (the
+    ``comention_edges`` output contract).  Returns ``(labels, n_rounds,
+    converged)`` with labels as (node, community) rows.
+
+    Labels start as the node id, or as ``init_labels`` where it has
+    the node.  Each round every node adopts the PLURALITY label among
+    its neighbours, ties broken by the lexicographically smallest label
+    (a min-struct argmax) — fully deterministic, so the DuckDB
+    unrolled-CTE oracle replays every round exactly.  Per round: one
+    join (labels onto the edge list) and two aggregations;
+    ``localCheckpoint`` truncates lineage per round, the label
+    dimension is never broadcast (unbounded), no driver collect.
+
+    With ``check`` each round also counts the labels it changed (one
+    node-keyed join; the driver sees one long) and the loop stops at
+    the first round that changes none; without it, exactly ``rounds``
+    rounds run and ``converged`` is False.
+    """
+    e = edges.select(F.col("a").alias("u"), F.col("b").alias("v")) \
+        .distinct().persist()
+    und = e.union(
+        e.select(F.col("v").alias("u"), F.col("u").alias("v"))
     ).persist()
-    if init_ranks is None:
-        ranks = ninfo.withColumn("pr", F.lit(1.0 / n))
+    nodes = und.select("u").distinct()
+    if init_labels is None:
+        labels = nodes.withColumn("lbl", F.col("u"))
     else:
-        ranks = (
-            ninfo.join(
-                init_ranks.select("node", F.col("pr").alias("pr0")),
-                "node", "left",
+        labels = (
+            nodes.join(
+                init_labels.select(F.col("node").alias("u"),
+                                   F.col("community").alias("lbl0")),
+                "u", "left",
             )
-            .select("node", "od",
-                    F.coalesce(F.col("pr0"), F.lit(1.0 / n)).alias("pr"))
+            .select("u", F.coalesce(F.col("lbl0"), F.col("u")).alias("lbl"))
         )
-    ranks = ranks.localCheckpoint(eager=False)
-    rounds = 0
-    for _ in range(max_iterations):
-        contribs = (
-            ew.join(ranks.select(F.col("node").alias("src"), "pr"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("pr") / F.col("od")).alias("contrib"))
-        )
-        dangling = (
-            ranks.filter(F.col("od").isNull())
-            .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dm"))
-        )
-        new_ranks = (
-            ninfo.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node", "od",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("contrib"), F.lit(0.0))
-                       + F.col("dm") / n)
-                ).alias("pr"),
-            )
+    if check:
+        # the first changed-label count reads the start labels again
+        labels = labels.localCheckpoint(eager=False)
+    n_rounds, converged = 0, False
+    for _ in range(rounds):
+        nb = und.join(
+            labels.select(F.col("u").alias("v"), "lbl"), "v"
+        ).select("u", "lbl")
+        counts = nb.groupBy("u", "lbl").agg(F.count("*").alias("c"))
+        new = (
+            counts.groupBy("u")
+            .agg(F.min(F.struct((-F.col("c")).alias("nc"),
+                                F.col("lbl").alias("l"))).alias("m"))
+            .select("u", F.col("m.l").alias("lbl"))
             .localCheckpoint(eager=False)
         )
-        rounds += 1
-        delta = (
-            new_ranks.join(
-                ranks.select("node", F.col("pr").alias("pr_old")), "node"
-            )
-            .agg(F.sum(F.abs(F.col("pr") - F.col("pr_old"))).alias("d"))
-            .first()["d"]
-        )
-        ranks = new_ranks
-        if delta is not None and delta < tol:
+        n_rounds += 1
+        if check:
+            converged = (
+                labels.join(new.select("u", F.col("lbl").alias("lbl2")), "u")
+                .filter(F.col("lbl") != F.col("lbl2"))
+                .count()
+            ) == 0
+        labels = new
+        if converged:
             break
-    out = ranks.select("node", "pr").localCheckpoint(eager=True)
-    ew.unpersist()
-    ninfo.unpersist()
+    out = labels.select(
+        F.col("u").alias("node"), F.col("lbl").alias("community")
+    ).localCheckpoint(eager=True)
+    und.unpersist()
     e.unpersist()
-    nodes.unpersist()
-    return out, rounds
+    return out, n_rounds, converged
 
 
-def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
-             iterations: int = PR_ITERATIONS,
-             damping: float = DAMPING) -> DataFrame:
-    """Fixed-iteration PageRank over the DISTINCT edge set.
+def label_propagation(edges: DataFrame) -> DataFrame:
+    """Synchronous label-propagation communities (``_lpa``) over an
+    undirected (a, b) edge list after a FIXED ``LPA_ITERATIONS`` rounds
+    — sync LPA can oscillate on bipartite structures, and a fixed
+    horizon keeps the result well-defined on both engines.  Returns
+    (node, community).
 
-    pr_{t+1}(v) = (1-d)/N + d * (sum_{u->v} pr_t(u)/outdeg(u)
-                                 + dangling_mass_t / N)
-
-    Returns (node, pr) with pr rounded to 6 decimals (cross-engine
-    float determinism rule).  N is computed once (scalar dimension);
-    everything in the loop is distributed.
+    Fixed-horizon LPA has no warm-start story (the labeling is defined
+    BY its trajectory); ``lpa_converged`` is the incremental variant.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct().persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        # empty edge list: no nodes, typed-empty result (guards the
-        # 1.0/n below; r2 ADVICE item 3)
-        out = nodes.select("node", F.lit(0.0).cast("double").alias("pr"))
-        e.unpersist()
-        nodes.unpersist()
-        return out
-    # loop-invariant state hoisted out of the rounds (guide §2.4): ew =
-    # edges pre-joined with out-degree, ninfo = nodes with nullable od
-    # (NULL = dangling).  Per round: one edge⋈ranks join + aggregation,
-    # a filter-aggregate for the dangling mass, and the rank rebuild —
-    # the r5 form paid an extra out_deg join and a LEFT ANTI join per
-    # round for the same values.
-    out_deg = e.groupBy("src").agg(F.count("*").alias("od"))
-    ew = e.join(out_deg, "src").persist()
-    ninfo = nodes.join(
-        out_deg.withColumnRenamed("src", "node"), "node", "left"
-    ).persist()
-    ranks = ninfo.withColumn("pr", F.lit(1.0 / n))
-    for _ in range(iterations):
-        contribs = (
-            ew.join(ranks.select(F.col("node").alias("src"), "pr"), "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum(F.col("pr") / F.col("od")).alias("contrib"))
-        )
-        dangling = (
-            ranks.filter(F.col("od").isNull())
-            .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dm"))
-        )
-        ranks = (
-            ninfo.join(contribs, "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node", "od",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.col("dm") / n)
-                ).alias("pr"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    # materialize the final ranks (eager checkpoint) BEFORE releasing
-    # the cached edge/node tables the iteration plan reads — after
-    # this the caller holds a self-contained result and the loop's
-    # persisted inputs are freed (r2 ADVICE item 3)
-    out = ranks.select("node", F.round("pr", 6).alias("pr")).localCheckpoint(
-        eager=True
-    )
-    ew.unpersist()
-    ninfo.unpersist()
-    e.unpersist()
-    nodes.unpersist()
-    return out
+    return _lpa(edges, LPA_ITERATIONS)[0]
+
+
+def lpa_converged(edges: DataFrame, init_labels: DataFrame | None = None):
+    """Label propagation (``_lpa``) iterated until the labeling stops
+    changing, optionally WARM-STARTED from a previous assignment — the
+    incremental-maintenance variant backing stream_communities_ivm.
+    Returns ``(labels, n_rounds, converged)``: (node, community) rows,
+    the number of plurality rounds applied (including the final round
+    that confirmed stability), and whether a fixed point was reached
+    within 25 rounds.  New nodes absent from ``init_labels`` start as
+    their own community, exactly like a cold start.
+
+    Warm-start guarantees — what holds and what does NOT:
+
+    * GUARANTEED (gated by Q:kg_lpa_inc_invariants): on an UNCHANGED
+      graph, restarting from a converged labeling re-confirms the same
+      fixed point in exactly 1 round with zero label changes — the
+      plurality update is deterministic, and a fixed point maps to
+      itself.  This is the delta-scaled IVM payoff: an empty/small
+      delta costs ~1 round instead of a full cold trajectory.
+    * NOT guaranteed (documented, not claimed): warm labels on a
+      CHANGED graph need not equal the cold labels of the new graph.
+      Unlike PageRank's contraction (unique fixed point, any start),
+      sync LPA admits MANY fixed points, and which one a run lands on
+      depends on its starting labels — the trajectory is part of the
+      algorithm.  A warm start converges to a valid, deterministic
+      labeling (same inputs -> same output), but tie-break sensitivity
+      means it can be a DIFFERENT valid community structure than a
+      cold run's.  Convergence itself is also graph-dependent: sync
+      plurality updates can 2-cycle on bipartite-ish structures, hence
+      the 25-round horizon and the explicit ``converged`` flag
+      (measured: the co-mention graphs converge in ~3 rounds at
+      sf0.001-0.01).
+    """
+    return _lpa(edges, 25, init_labels, check=True)

@@ -308,6 +308,14 @@ def write_delta(delta_df: DataFrame, store_path: str, version: int,
     of the same ``version`` resolves the SAME predecessor (below=) and
     overwrites its slot, so the loop stays idempotent.  Returns
     {mode, version, base, chain_len}.
+
+    De-commit window: a delta-mode write deletes the whole version
+    directory first, manifest included, and republishes the manifest
+    only after the delta parquet is written.  While a replay rewrites
+    an already-committed slot, that slot is therefore uncommitted, and
+    a reader resolving a LATER head whose chain lists this slot can
+    briefly miss that chain fragment.  This is within the single-writer
+    contract (one writer per store; replays come from that writer).
     """
     spark = delta_df.sparkSession
     pred = latest_committed_version(
@@ -328,8 +336,10 @@ def write_delta(delta_df: DataFrame, store_path: str, version: int,
         base, deltas = man["base"], list(man["deltas"])
         # a caller switching merge spec mid-chain would silently
         # reinterpret every EARLIER delta under the new spec at read
-        # time — refuse loudly instead (r6 ADVICE fix)
-        if man.get("merge") != merge:
+        # time — refuse loudly instead (r6 ADVICE fix).  The manifest
+        # holds the spec JSON-round-tripped, so compare the caller's
+        # spec in that form too: keys=("a", "b") equals ["a", "b"]
+        if man.get("merge") != json.loads(json.dumps(merge)):
             raise ValueError(
                 f"write_delta: merge spec {merge!r} differs from the "
                 f"predecessor chain's {man.get('merge')!r} at v{pred} "

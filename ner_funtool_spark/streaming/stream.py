@@ -550,7 +550,6 @@ def stream_comention_ivm(spark: SparkSession, docs_path: str,
 
 def stream_communities_ivm(spark: SparkSession, docs_path: str,
                            edges_store: str, labels_store: str,
-                           max_rounds: int = 25,
                            schema: str = "doc_id bigint, text string, "
                                          "lang string, source string, "
                                          "n_chars bigint",
@@ -608,9 +607,7 @@ def stream_communities_ivm(spark: SparkSession, docs_path: str,
         )
         prev_l = read_snapshot(spark, labels_store, below=v)
         edges = read_snapshot(spark, edges_store, below=v + 1, at_least=lo)
-        labels, n_rounds, converged = lpa_converged(
-            edges, init_labels=prev_l, max_rounds=max_rounds
-        )
+        labels, n_rounds, converged = lpa_converged(edges, init_labels=prev_l)
         write_snapshot(labels, labels_store, v)
         log.append((epoch_id, n_rounds, converged))
 

@@ -305,3 +305,60 @@ def test_lpa_converged_fixed_point_and_warm_start(spark):
     warm2, _, conv2 = lpa_converged(grown, init_labels=cold)
     got2 = {r["node"]: r["community"] for r in warm2.collect()}
     assert conv2 and set(got2) == set(labels) | {"w", "v"}
+
+
+# cross-variant pins: the public PageRank and LPA functions are views of
+# one loop each (_power_iteration, _lpa), so their results must agree
+# wherever their definitions coincide
+
+_CLIQUES = [("a1", "a2"), ("a1", "a3"), ("a2", "a3"),
+            ("b1", "b2"), ("b1", "b3"), ("b2", "b3"),
+            ("a3", "b1")]
+_DIRECTED = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"), ("c", "d"),
+             ("d", "b"), ("b", "e"), ("e", "f")]  # f dangling
+
+
+def test_label_propagation_equals_converged_lpa(spark):
+    """On a graph that converges within LPA_ITERATIONS rounds, the
+    fixed horizon and the fixed-point loop land on the same labels."""
+    from ner_funtool_spark.operators.graph import (
+        LPA_ITERATIONS,
+        label_propagation,
+        lpa_converged,
+    )
+
+    df = spark.createDataFrame(_CLIQUES, "a string, b string")
+    conv, rounds, converged = lpa_converged(df)
+    assert converged and rounds <= LPA_ITERATIONS
+    fixed = {r["node"]: r["community"] for r in label_propagation(df).collect()}
+    assert fixed == {r["node"]: r["community"] for r in conv.collect()}
+
+
+def test_ppr_seeded_everywhere_equals_pagerank(spark):
+    """Seeding every node makes the personalized teleport uniform."""
+    from ner_funtool_spark.operators.graph import pagerank_personalized
+
+    df = spark.createDataFrame(_DIRECTED, "src string, dst string")
+    nodes = sorted({n for e in _DIRECTED for n in e})
+    want = {r["node"]: r["pr"] for r in pagerank(df).collect()}
+    got = {r["node"]: r["pr"] for r in
+           pagerank_personalized(df, nodes).collect()}
+    assert set(got) == set(want) == set(nodes)
+    for n in nodes:
+        assert abs(got[n] - want[n]) < 1e-6, n
+
+
+def test_pagerank_converged_equals_long_fixed_horizon(spark):
+    """The converged vector (tol 1e-9 stops it early: ~32 rounds here),
+    rounded at the reporting edge, matches the fixed-horizon PageRank
+    run for as many rounds as the converged loop may take."""
+    from ner_funtool_spark.operators.graph import pagerank_converged
+
+    df = spark.createDataFrame(_DIRECTED, "src string, dst string")
+    conv, rounds = pagerank_converged(df)
+    assert 0 < rounds < 60
+    got = {r["node"]: round(r["pr"], 6) for r in conv.collect()}
+    want = {r["node"]: r["pr"] for r in pagerank(df, iterations=60).collect()}
+    assert set(got) == set(want)
+    for n, pr in want.items():
+        assert abs(got[n] - pr) < 1.5e-6, n

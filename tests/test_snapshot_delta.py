@@ -230,3 +230,21 @@ def test_uncommitted_delta_version_is_invisible(spark, tmp_path):
                  '"keys": ["node"], "sums": ["deg"]}}')
     assert latest_committed_version(spark, store) == 0
     assert _counts(spark, store) == {"a": 1}
+
+
+def test_merge_spec_guard_normalizes_tuples(spark, tmp_path):
+    """The mid-chain merge-spec guard compares specs in their JSON form:
+    a tuple-keyed spec equal to the chain's list-keyed one is accepted,
+    a truly different spec is refused."""
+    store = str(tmp_path / "guard")
+    rows = "node string, deg bigint"
+    write_delta(spark.createDataFrame([("a", 1)], rows), store, 0, merge=ADD)
+    write_delta(spark.createDataFrame([("a", 2)], rows), store, 1, merge=ADD)
+    same = {"kind": "additive", "keys": ("node",), "sums": ("deg",)}
+    info = write_delta(spark.createDataFrame([("b", 1)], rows), store, 2,
+                       merge=same)
+    assert info["mode"] == "delta" and info["chain_len"] == 2
+    assert _counts(spark, store) == {"a": 3, "b": 1}
+    with pytest.raises(ValueError, match="merge spec"):
+        write_delta(spark.createDataFrame([("c", 1)], rows), store, 3,
+                    merge={"kind": "distinct"})

@@ -3,6 +3,9 @@ check, then each queries()[name] vs oracle_sql()[name] on DuckDB at the
 given sf dir — row count + sorted-column value hash, order-insensitive.
 
 Usage: python tools/driver_sim.py [sf_dir] [query ...]
+
+Runs on local[N]: N is $DRIVER_SIM_CORES if set, else $SPARK_GRAFT_CPUS,
+else the host's core count.
 """
 
 from __future__ import annotations
@@ -52,7 +55,8 @@ def main() -> int:
     import __spark_entry__ as mod
     from ner_funtool_spark.session import get_spark
 
-    cores = int(os.environ.get("DRIVER_SIM_CORES", "8"))
+    cores = int(os.environ.get("DRIVER_SIM_CORES")
+                or os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     spark = get_spark("driver_sim", cores=cores, shuffle_partitions=cores)
 
     print("== smoke: entry(spark) ==")
